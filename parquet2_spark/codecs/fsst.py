@@ -6,23 +6,23 @@ Compression", VLDB 2020): a table of ≤255 symbols of 1-8 bytes built on a
 sample by iterative pair-merging, greedy longest-match encoding, code 255
 as the escape marker for uncovered bytes.
 
-Implementation notes (pure Python/numpy, no per-row work):
-- training runs a few generations over a bounded sample; tokenization uses
-  a compiled regex alternation sorted longest-first, which is exactly
-  "greedy longest match at each position" executed in C;
-- encode = one regex pass over the whole chunk buffer (per-match Python,
-  not per-row);
+Implementation notes (no per-row Python):
+- training runs a few generations over a bounded sample; each generation
+  encodes the sample with the current table and counts distinct tokens
+  and adjacent token pairs with np.unique;
+- encode is greedy longest match at each position: the C kernel when it
+  builds (codecs/native.py), else the vectorized numpy path below, which
+  is the reference the C kernel is tested against;
 - decode is fully vectorized: escape resolution via run-parity on 0xFF
   runs, then a gather from the symbol blob (the paper's headline property
   — decode much faster than encode — holds here too).
 
 Blob layout: [uleb n_symbols][u8 len × n_symbols][symbol bytes]
-             [uleb payload_len][payload]
+             [uleb raw_len][uleb payload_len][payload]
 """
 
 from __future__ import annotations
 
-import re
 from collections import Counter
 
 import numpy as np
@@ -37,18 +37,12 @@ DEFAULT_SAMPLE = 1 << 15  # 32 KiB: same ratio as 64 KiB at half the training co
 
 
 class SymbolTable:
-    __slots__ = ("symbols", "_pattern", "_code_of")
+    __slots__ = ("symbols",)
 
     def __init__(self, symbols: list[bytes]):
         if len(symbols) > MAX_SYMBOLS:
             raise ValueError("too many symbols")
         self.symbols = symbols
-        self._code_of = {s: i for i, s in enumerate(symbols)}
-        if symbols:
-            ordered = sorted(symbols, key=len, reverse=True)
-            self._pattern = re.compile(b"|".join(re.escape(s) for s in ordered))
-        else:
-            self._pattern = None
 
     def serialize(self) -> bytes:
         parts = [uleb128_encode(len(self.symbols))]
@@ -66,23 +60,6 @@ class SymbolTable:
             symbols.append(bytes(buf[pos : pos + ln]))
             pos += ln
         return cls(symbols), pos
-
-
-def _tokenize(data: bytes, table: SymbolTable) -> list[bytes]:
-    """Greedy longest-match token stream (symbols + literal 1-byte gaps)."""
-    if table._pattern is None:
-        return [data[i : i + 1] for i in range(len(data))]
-    out: list[bytes] = []
-    last = 0
-    for m in table._pattern.finditer(data):
-        s, e = m.span()
-        for i in range(last, s):
-            out.append(data[i : i + 1])
-        out.append(m.group())
-        last = e
-    for i in range(last, len(data)):
-        out.append(data[i : i + 1])
-    return out
 
 
 def _token_entries(codes: np.ndarray, n_symbols: int) -> np.ndarray:
@@ -156,25 +133,6 @@ def train(sample: bytes, generations: int = GENERATIONS) -> SymbolTable:
     return table
 
 
-def encode_with_table_regex(data: bytes, table: SymbolTable) -> bytes:
-    """Reference implementation (regex alternation, per-match Python).
-    Kept for cross-checking the vectorized encoder — both implement the
-    same greedy longest-match-at-each-position semantics."""
-    out = bytearray()
-    code_of = table._code_of
-    last = 0
-    if table._pattern is not None:
-        for m in table._pattern.finditer(data):
-            s, e = m.span()
-            if s > last:
-                _escape_into(out, data[last:s])
-            out.append(code_of[m.group()])
-            last = e
-    if last < len(data):
-        _escape_into(out, data[last:])
-    return bytes(out)
-
-
 def _window_keys(arr: np.ndarray) -> np.ndarray:
     """uint64 little-endian 8-byte window starting at each position
     (zero-padded past the end)."""
@@ -187,8 +145,7 @@ def _window_keys(arr: np.ndarray) -> np.ndarray:
 
 def encode_with_table(data: bytes, table: SymbolTable) -> bytes:
     """Greedy longest-match encode: C accelerator when available, else the
-    vectorized numpy path below. All three implementations (C, numpy,
-    regex) are byte-identical."""
+    vectorized numpy path below; both give identical bytes."""
     from . import native
 
     out = native.fsst_encode(data, table.symbols) if data else b""
@@ -206,7 +163,8 @@ def encode_with_table_numpy(data: bytes, table: SymbolTable) -> bytes:
        pointer-doubling over the jump array — O(n log n) numpy, no
        per-byte Python;
     3. token emission as two vectorized scatters.
-    Output is byte-identical to the regex reference implementation.
+    This is the reference implementation: the C kernel must match its
+    output byte for byte.
     """
     n = len(data)
     if n == 0:

@@ -1,9 +1,9 @@
 """Lazy ctypes loader for the optional C accelerator (_native.c).
 
 Compiled once per machine into a cache dir with the system compiler; all
-callers must fall back to the pure numpy/regex implementations when the
-build is unavailable (no compiler, readonly FS, …). The accelerated
-kernels are byte-identical to the Python ones (asserted in tests).
+callers must fall back to the numpy implementations when the build is
+unavailable (no compiler, readonly FS, …). Each C kernel is byte-identical
+to its numpy fallback (tests/test_native_parity.py).
 """
 
 from __future__ import annotations

@@ -8,8 +8,6 @@ fine (the reference uses them the same way).
 
 from __future__ import annotations
 
-import numpy as np
-
 _U64_MASK = (1 << 64) - 1
 
 
@@ -71,14 +69,3 @@ def zigzag_leb128_decode(buf, offset: int = 0) -> tuple[int, int]:
     raw, pos = uleb128_decode(buf, offset)
     return zigzag_decode(raw), pos
 
-
-def zigzag_encode_array(values: np.ndarray) -> np.ndarray:
-    """Vectorized zigzag of an int64 array → uint64."""
-    v = values.astype(np.int64, copy=False)
-    return (v.astype(np.uint64) << np.uint64(1)) ^ (v >> np.int64(63)).astype(np.uint64)
-
-
-def zigzag_decode_array(values: np.ndarray) -> np.ndarray:
-    """Vectorized inverse zigzag of a uint64 array → int64."""
-    v = values.astype(np.uint64, copy=False)
-    return ((v >> np.uint64(1)) ^ (np.zeros_like(v) - (v & np.uint64(1)))).astype(np.int64)

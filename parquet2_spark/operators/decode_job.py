@@ -1215,49 +1215,25 @@ def decode(
             cols.append(a)
         return pa.table(dict(zip(need, cols)))
 
-    if os.environ.get("P2S_DECODE_GROUPBY"):
-        # measurement escape hatch: the pre-round-6 plan shape (hash
-        # exchange on part_id + grouped rebuild) for A/B profiling
-        out = df.groupBy("part_id").applyInArrow(rebuild, out_schema)
-    else:
-        # EXCHANGE-FREE rebuild (guide §2.4): every chunk file is one
-        # partition's rows and one parquet row group (writers emit ≤
-        # ~30 rows/file), so a file can never split across scan tasks
-        # and a partition's chunk rows arrive CONTIGUOUS in the scan
-        # stream — the pruning joins are all broadcast (stream-side
-        # order preserved) and part_id is constant per file. Splitting
-        # the stream at part_id boundaries therefore feeds rebuild()
-        # exactly the groups the old groupBy(part_id) exchange built,
-        # without shuffling the payload bytes at all (measured: the
-        # groupBy plan shuffled every surviving payload byte once and
-        # AQE then coalesced the tiny-by-bytes exchange to 1-3 tasks,
-        # serializing the decode UDF behind it).
-        def rebuild_stream(batches):
-            bufs: list = []
-            cur_pid = None
-            pid_idx = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                if pid_idx is None:
-                    pid_idx = rb.schema.get_field_index("part_id")
-                pids = rb.column(pid_idx).to_numpy()
-                cuts = np.flatnonzero(pids[1:] != pids[:-1]) + 1
-                starts = np.concatenate(([0], cuts))
-                ends = np.concatenate((cuts, [len(pids)]))
-                for s, e in zip(starts, ends):
-                    p = int(pids[s])
-                    if cur_pid is None:
-                        cur_pid = p
-                    elif p != cur_pid:
-                        yield from rebuild(pa.Table.from_batches(bufs)).to_batches()
-                        bufs = []
-                        cur_pid = p
-                    bufs.append(rb.slice(s, e - s))
-            if bufs:
-                yield from rebuild(pa.Table.from_batches(bufs)).to_batches()
+    # EXCHANGE-FREE rebuild (guide §2.4): every chunk file is one
+    # partition's rows and one parquet row group (writers emit ≤ ~30
+    # rows/file), so a file can never split across scan tasks and a
+    # partition's chunk rows arrive CONTIGUOUS in the scan stream — the
+    # pruning joins are all broadcast (stream-side order preserved) and
+    # part_id is constant per file. Splitting the stream at part_id
+    # boundaries therefore feeds rebuild() exactly the groups a
+    # groupBy(part_id) exchange would build, without shuffling the
+    # payload bytes at all (measured: the groupBy plan shuffled every
+    # surviving payload byte once and AQE then coalesced the
+    # tiny-by-bytes exchange to 1-3 tasks, serializing the decode UDF
+    # behind it). iter_key_runs raises if a part_id ever arrives split.
+    def rebuild_stream(batches):
+        from .encode_job import iter_key_runs
 
-        out = df.mapInArrow(rebuild_stream, out_schema)
+        for tbl in iter_key_runs(batches, "part_id"):
+            yield from rebuild(tbl).to_batches()
+
+    out = df.mapInArrow(rebuild_stream, out_schema)
     # the key column rides along for pruning; drop it unless requested.
     # Residual equality filters go through _typed_lit for the same
     # session-tz reason as the bloom probes above.

@@ -111,6 +111,50 @@ def _shingle_hash_batch(texts: list[str], k: int) -> tuple[np.ndarray, np.ndarra
     return _mix(base[valid], 0), seg_starts[:-1]
 
 
+def _minhash(h: np.ndarray, seg_starts: np.ndarray, consts: np.ndarray) -> np.ndarray:
+    """(len(consts), n_docs) per-segment splitmix minima. C kernel when
+    built, else one mix + segment-min pass per permutation over the whole
+    batch (no per-doc python loop) — the reference the kernel must match."""
+    from ..codecs import native
+
+    mins = native.minhash64(h, seg_starts, consts)
+    if mins is not None:
+        return mins
+    mins = np.empty((len(consts), len(seg_starts)), dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for p, c in enumerate(consts):
+            z = h + c
+            z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+            z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+            z ^= z >> np.uint64(31)
+            mins[p] = np.minimum.reduceat(z, seg_starts)
+    return mins
+
+
+def _simhash(h: np.ndarray, seg_starts: np.ndarray) -> np.ndarray:
+    """Per-segment 64-bit sign-sum signatures. C kernel when built, else
+    one doc at a time over the batch hashes — the reference the kernel
+    must match."""
+    from ..codecs import native
+
+    sigs = native.simhash64(h, seg_starts)
+    if sigs is not None:
+        return sigs
+    bit_idx = np.arange(64, dtype=np.uint64)
+    sigs = np.zeros(len(seg_starts), dtype=np.int64)
+    bounds = np.append(seg_starts, len(h))
+    for j in range(len(seg_starts)):
+        hh = h[bounds[j] : bounds[j + 1]]
+        bits = (hh[:, None] >> bit_idx) & np.uint64(1)  # (n, 64)
+        # signed accumulation — uint64 would wrap on negative votes
+        votes = bits.sum(axis=0).astype(np.int64) * 2 - len(hh)
+        v = np.uint64(0)
+        for b in np.flatnonzero(votes > 0):
+            v |= np.uint64(1) << np.uint64(b)
+        sigs[j] = np.int64(v >> np.uint64(1))  # keep it positive
+    return sigs
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -133,21 +177,8 @@ def minhash_signatures(
         keep = [i for i, t in enumerate(texts) if t]
         out: list = [None] * len(texts)
         if keep:
-            from ..codecs import native
-
             h, seg_starts = _shingle_hash_batch([texts[i] for i in keep], shingle_k)
-            mins = native.minhash64(h, seg_starts, _consts[:, 0])
-            if mins is None:
-                # numpy fallback: one splitmix + segment-min pass per
-                # permutation over the whole batch (no per-doc python loop)
-                mins = np.empty((num_hashes, len(keep)), dtype=np.uint64)
-                with np.errstate(over="ignore"):
-                    for p in range(num_hashes):
-                        z = h + _consts[p, 0]
-                        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-                        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-                        z ^= z >> np.uint64(31)
-                        mins[p] = np.minimum.reduceat(z, seg_starts)
+            mins = _minhash(h, seg_starts, _consts[:, 0])
             sigs = (mins >> np.uint64(1)).astype(np.int64)
             for j, i in enumerate(keep):
                 out[i] = sigs[:, j].tolist()
@@ -273,25 +304,8 @@ def simhash_signatures(
         out = np.zeros(len(texts), dtype=np.int64)
         keep = [i for i, t in enumerate(texts) if t]
         if keep:
-            from ..codecs import native
-
             h, seg_starts = _shingle_hash_batch([texts[i] for i in keep], shingle_k)
-            sigs = native.simhash64(h, seg_starts)
-            if sigs is None:
-                # numpy fallback, one doc at a time over the batch hashes
-                bit_idx = np.arange(64, dtype=np.uint64)
-                sigs = np.zeros(len(keep), dtype=np.int64)
-                bounds = np.append(seg_starts, len(h))
-                for j in range(len(keep)):
-                    hh = h[bounds[j] : bounds[j + 1]]
-                    bits = (hh[:, None] >> bit_idx) & np.uint64(1)  # (n, 64)
-                    # signed accumulation — uint64 would wrap on negative votes
-                    votes = bits.sum(axis=0).astype(np.int64) * 2 - len(hh)
-                    v = np.uint64(0)
-                    for b in np.flatnonzero(votes > 0):
-                        v |= np.uint64(1) << np.uint64(b)
-                    sigs[j] = np.int64(v >> np.uint64(1))  # keep it positive
-            out[keep] = sigs
+            out[keep] = _simhash(h, seg_starts)
         return pd.Series(out)
 
     return df.select(F.col(id_col), sig(F.col(text_col)).alias("simhash"))

@@ -584,6 +584,39 @@ def _jstat(v, round_up: bool = False):
     return v
 
 
+def iter_key_runs(batches, key: str):
+    """Split a stream of Arrow record batches whose rows arrive grouped by
+    ``key`` into one ``pa.Table`` per run of equal keys, using zero-copy
+    batch slices. A run may span batches; empty batches are skipped.
+    Raises ``ValueError`` naming the key when a key shows up again after
+    its run has ended, i.e. when the stream is not grouped."""
+    bufs: list = []
+    cur = None
+    ended: set = set()
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        vals = rb.column(key).to_numpy()
+        cuts = np.flatnonzero(vals[1:] != vals[:-1]) + 1
+        starts = np.concatenate(([0], cuts))
+        ends = np.concatenate((cuts, [len(vals)]))
+        for s, e in zip(starts, ends):
+            k = vals[s].item()
+            if bufs and k != cur:
+                yield pa.Table.from_batches(bufs)
+                bufs = []
+                ended.add(cur)
+            if k in ended:
+                raise ValueError(
+                    f"{key}={k!r} reappears after its run ended: "
+                    f"the stream is not grouped by {key}"
+                )
+            cur = k
+            bufs.append(rb.slice(s, e - s))
+    if bufs:
+        yield pa.Table.from_batches(bufs)
+
+
 def committed_parts(snapshot_dir: str, filesystem=None) -> set[int]:
     fs, root = fsio.resolve(snapshot_dir, filesystem)
     commits = fsio.join(root, "_commits")
@@ -645,19 +678,12 @@ def encode(
     if already:
         planned = planned.filter(~F.col("_part_id").isin([int(p) for p in already]))
 
-    def run(tbl: pa.Table) -> pa.Table:
-        return _encode_partition_arrow(tbl, cfg, snapshot_dir, columns, target_schema)
-
-    if cfg.shuffle and os.environ.get("P2S_ENCODE_GROUPBY"):
-        # measurement escape hatch: the pre-round-5 plan shape (hash
-        # exchange + Arrow-side sort inside the UDF) for A/B profiling
-        metrics_df = planned.groupBy("_part_id").applyInArrow(run, CHUNK_SCHEMA)
-    elif cfg.shuffle:
+    if cfg.shuffle:
         # One exchange on _part_id, then the SORT RUNS IN TUNGSTEN
         # (off-heap radix, spillable) instead of an Arrow
         # sort_indices+take gather of the whole text-heavy group in the
         # Python worker. Rows arrive (part_id, sort_by)-ordered, so
-        # groups are CONTIGUOUS and the Python side splits them with
+        # groups are CONTIGUOUS and iter_key_runs splits them with
         # zero-copy batch slices — no pc.filter/take copies anywhere.
         # Measured on the 1M-row web corpus: bit-identical chunk bytes,
         # ~5-15% lower encode wall than groupBy().applyInArrow(), and
@@ -676,36 +702,10 @@ def encode(
         )
 
         def run_sorted(batches):
-            bufs: list = []
-            cur_pid = None
-
-            def flush():
-                tbl = pa.Table.from_batches(bufs)
-                return _encode_partition_arrow(
+            for tbl in iter_key_runs(batches, "_part_id"):
+                yield from _encode_partition_arrow(
                     tbl, cfg, snapshot_dir, columns, target_schema, presorted=True
-                )
-
-            pid_idx = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                if pid_idx is None:
-                    pid_idx = rb.schema.get_field_index("_part_id")
-                pid = rb.column(pid_idx).to_numpy()
-                cuts = np.flatnonzero(pid[1:] != pid[:-1]) + 1
-                starts = np.concatenate(([0], cuts))
-                ends = np.concatenate((cuts, [len(pid)]))
-                for s, e in zip(starts, ends):
-                    p = int(pid[s])
-                    if cur_pid is None:
-                        cur_pid = p
-                    elif p != cur_pid:
-                        yield from flush().to_batches()
-                        bufs = []
-                        cur_pid = p
-                    bufs.append(rb.slice(s, e - s))
-            if bufs:
-                yield from flush().to_batches()
+                ).to_batches()
 
         metrics_df = arranged.mapInArrow(run_sorted, CHUNK_SCHEMA)
     else:
@@ -718,8 +718,9 @@ def encode(
             bl = [rb for rb in batches if rb.num_rows]
             if not bl:
                 return
-            out = run(pa.Table.from_batches(bl))
-            yield from out.to_batches()
+            yield from _encode_partition_arrow(
+                pa.Table.from_batches(bl), cfg, snapshot_dir, columns, target_schema
+            ).to_batches()
 
         metrics_df = planned.mapInArrow(run_map, CHUNK_SCHEMA)
 

@@ -393,13 +393,8 @@ def encode_fused(
         return arr
 
     def merge_encode(tbl: pa.Table) -> pa.Table:
-        import os as _os
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
-
-        _dbg = _os.environ.get("P2S_LM_DEBUG")
-        _t00 = time.time()
-        _ph = {"read": 0.0, "decode": 0.0, "filter": 0.0}
 
         b = int(tbl.column("bucket")[0].as_py())
         lo = bounds[b - 1] if b > 0 else None
@@ -413,9 +408,7 @@ def encode_fused(
         ):
             fs, root = fsio.resolve(snap, filesystem)
             path = fsio.join(root, "chunks", f"part-{int(pid):06d}.parquet")
-            _t = time.time()
             ct = pq.read_table(path, filesystem=fs)
-            _ph["read"] += time.time() - _t
             names = ct.column("column").to_pylist()
             row_of = {name: i for i, name in enumerate(names)}
             have = set(ct.schema.names)
@@ -473,7 +466,6 @@ def encode_fused(
                 if len(keep) >= len(mins):
                     keep = None  # nothing pruned — take the fast whole-chunk path
 
-            _t = time.time()
             payload_of = {
                 name: p
                 for name, p in zip(names, ct.column("payload").to_pylist())
@@ -508,8 +500,6 @@ def encode_fused(
                     a = a.cast(expected_pa[c])
                 cols.append(a)
             t = pa.table(dict(zip(columns, cols)))
-            _ph["decode"] += time.time() - _t
-            _t = time.time()
             if lo is not None or hi is not None:
                 v = _cmp_space(t.column(primary))
                 mask = None
@@ -524,7 +514,6 @@ def encode_fused(
                     t = t.filter(mask)
             if t.num_rows:
                 runs.append(t)
-            _ph["filter"] += time.time() - _t
         if not runs:
             # plan overlap with zero surviving rows: the shuffle path
             # would simply not produce this partition — emit no chunk
@@ -545,20 +534,10 @@ def encode_fused(
             c: (hll.merge(sketches[c]) if c not in sketch_miss else None)
             for c in columns
         }
-        _t = time.time()
-        out = _encode_partition_arrow(
+        return _encode_partition_arrow(
             merged, cfg, snapshot_dir, columns, target_schema,
             presorted=True, ndv_override=ndv_override,
         )
-        if _dbg:
-            import json as _j
-            _os.makedirs(_dbg, exist_ok=True)
-            with open(f"{_dbg}/bucket-{b}.json", "w") as fh:
-                _j.dump({"bucket": b, "task_start": _t00, **{k: round(v, 2) for k, v in _ph.items()},
-                         "sort_s": round(_t - _t00 - sum(_ph.values()), 2),
-                         "encode_s": round(time.time() - _t, 2),
-                         "total_s": round(time.time() - _t00, 2)}, fh)
-        return out
 
     # NOT groupBy().applyInArrow: the plan rows are a few KB, so AQE
     # coalesces the groupBy's shuffle to ONE partition (advisory size is

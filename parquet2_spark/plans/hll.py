@@ -19,7 +19,6 @@ so the sketch adds no per-byte Python work to the encode hot path.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 P = 16  # 2^16 = 65536 registers, 1 byte each (64 KB per chunk per column)
 M = 1 << P
@@ -100,32 +99,3 @@ def estimate(sketch: bytes) -> int:
         if zeros:
             est = M * np.log(M / zeros)
     return int(round(est))
-
-
-# ---- Spark aggregation surface (used by decode_job.stats) ----
-
-
-def merge_agg(col):
-    """Grouped-agg pandas UDF: max-merge the group's register files.
-    (Explicit GROUPED_AGG eval type: the type-hint inference has no
-    Series → bytes signature.)"""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType
-
-    @F.pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def _merge(s):
-        return merge(s)
-
-    return _merge(col)
-
-
-def estimate_col(col):
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _est(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else estimate(b) for b in s], dtype="Int64"
-        )
-
-    return _est(col)

@@ -15,7 +15,6 @@ runs of 64 rows — exercising the salting and RLE paths.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 SEED = 42
 LANGS = [
@@ -133,15 +132,6 @@ def _interleave(pieces: list[tuple[np.ndarray, np.ndarray]]) -> tuple[np.ndarray
         idx = np.arange(total) + np.repeat(dst[j] - pos0[:-1], lens)
         out[idx] = buf
     return out_lens, out
-
-
-def _ascii_col(strings: list[bytes], picks: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    lens = np.fromiter((len(s) for s in strings), dtype=np.int64, count=len(strings))
-    starts = np.zeros(len(strings) + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    data = np.frombuffer(b"".join(strings), dtype=np.uint8)
-    ln, buf = _gather_concat(starts[:-1], lens, data, picks)
-    return ln, buf
 
 
 def _digits(values: np.ndarray, width: int) -> tuple[np.ndarray, np.ndarray]:
@@ -289,10 +279,6 @@ def _strip_space(lens: np.ndarray, buf: np.ndarray) -> tuple[np.ndarray, np.ndar
     new0 = np.concatenate(([0], np.cumsum(lens2)[:-1]))
     take = np.arange(total) + np.repeat(pos0[:-1] - new0, lens2)
     return lens2, buf[take]
-
-
-def generate_pandas(ids_arr: np.ndarray, seed: int = SEED) -> pd.DataFrame:
-    return generate_batch(ids_arr, seed).to_pandas()
 
 
 SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"

@@ -74,26 +74,6 @@ def test_shingle_hash_batch_matches_per_doc():
         assert np.array_equal(h[bounds[j]:bounds[j + 1]], ref), t
 
 
-def test_simhash_c_kernel_matches_numpy():
-    from parquet2_spark.codecs import native
-
-    texts = ["hello world wide web", "der schnelle fuchs", "zzz", "mixed 123 !@# text"]
-    h, starts = dedup._shingle_hash_batch(texts, 4)
-    c = native.simhash64(h, starts)
-    if c is None:
-        pytest.skip("C accelerator unavailable")
-    bounds = np.append(starts, len(h))
-    bit_idx = np.arange(64, dtype=np.uint64)
-    for j in range(len(texts)):
-        hh = h[bounds[j]:bounds[j + 1]]
-        bits = (hh[:, None] >> bit_idx) & np.uint64(1)
-        votes = bits.sum(axis=0).astype(np.int64) * 2 - len(hh)
-        v = np.uint64(0)
-        for b in np.flatnonzero(votes > 0):
-            v |= np.uint64(1) << np.uint64(b)
-        assert c[j] == np.int64(v >> np.uint64(1)), texts[j]
-
-
 def test_simhash_close_for_near_dups(spark, docs):
     sigs = dedup.simhash_signatures(docs).toPandas().set_index("doc_id")["simhash"]
     assert sigs.loc[0] == sigs.loc[1]
