@@ -548,8 +548,9 @@ def encode_page(
     if codec is None:
         # standalone page: selection measures THIS page's values, so its
         # candidate bytes are reusable below under the same conditions as
-        # the chunk-probe path
-        _reuse = {}
+        # the chunk-probe path (a caller's dict is filled, not replaced)
+        if _reuse is None:
+            _reuse = {}
         codec = select_codec(arr, cfg, st, vals=vals, _reuse=_reuse)
 
     # CONSTANT stores only the first non-null value — if a chunk-forced

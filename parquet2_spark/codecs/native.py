@@ -11,6 +11,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import platform
 import subprocess
 import tempfile
 
@@ -21,35 +22,52 @@ _TRIED = False
 _SRC = os.path.join(os.path.dirname(__file__), "_native.c")
 
 
+# compile flags, best first; the portable build is the fallback
+_FLAGS = (["-O3", "-march=native"], ["-O2"])
+
+
+def _host_cpu() -> str:
+    """Identity of this host's CPU for the build cache tag: the cpuinfo
+    feature flags (what ``-march=native`` compiles for), else the machine
+    architecture."""
+    try:
+        with open("/proc/cpuinfo") as f:
+            for line in f:
+                if line.startswith(("flags", "Features")):
+                    return line.split(":", 1)[1].strip()
+    except OSError:
+        pass
+    return platform.machine()
+
+
 def _build() -> "ctypes.CDLL | None":
     try:
         with open(_SRC, "rb") as f:
             src = f.read()
     except OSError:
         return None
-    tag = hashlib.sha256(src).hexdigest()[:16]
-    cache = os.path.join(tempfile.gettempdir(), f"p2s_native_{tag}.so")
-    if not os.path.exists(cache):
+    # the tag covers source, flags and host CPU: a cache dir shared across
+    # hosts never hands one CPU another's -march=native build
+    host = _host_cpu().encode()
+    for flags in _FLAGS:
+        tag = hashlib.sha256(src + " ".join(flags).encode() + host).hexdigest()[:16]
+        cache = os.path.join(tempfile.gettempdir(), f"p2s_native_{tag}.so")
+        if os.path.exists(cache):
+            break
         tmp = cache + f".build-{os.getpid()}"
         try:
             subprocess.run(
-                ["cc", "-O3", "-march=native", "-shared", "-fPIC", "-o", tmp, _SRC],
+                ["cc", *flags, "-shared", "-fPIC", "-o", tmp, _SRC],
                 check=True,
                 capture_output=True,
                 timeout=60,
             )
             os.replace(tmp, cache)
-        except Exception:
-            try:
-                subprocess.run(
-                    ["cc", "-O2", "-shared", "-fPIC", "-o", tmp, _SRC],
-                    check=True,
-                    capture_output=True,
-                    timeout=60,
-                )
-                os.replace(tmp, cache)
-            except Exception:
-                return None
+            break
+        except (OSError, subprocess.SubprocessError):
+            continue
+    else:
+        return None
     try:
         lib = ctypes.CDLL(cache)
     except OSError:

@@ -688,6 +688,29 @@ def prune_by_range(df: DataFrame, column: str, lo=None, hi=None) -> DataFrame:
     return out
 
 
+def _survivor_frame(rows: DataFrame, pos_cols: list, veto=None) -> DataFrame:
+    """The ONE partition-pruning query. ``rows`` is the chunks frame cut to
+    the predicate columns' metadata, with every positive predicate already
+    applied as a row filter that drops only its own column's failing chunk
+    rows. A partition survives when a row of each ``pos_cols`` column is
+    left (positive evidence) and no row satisfies ``veto`` (negative
+    evidence). Its output is the surviving part ids: O(survivors) rows.
+
+    A partition holds one chunk row per column, so with a single positive
+    column and no veto the surviving rows ARE the survivors: no aggregate,
+    no exchange."""
+    if len(pos_cols) == 1 and veto is None:
+        return rows.select("part_id")
+    flags = [F.max(F.col("column") == c).alias(f"_p{i}") for i, c in enumerate(pos_cols)]
+    cond = F.lit(True)
+    for i in range(len(pos_cols)):
+        cond = cond & F.col(f"_p{i}")
+    if veto is not None:
+        flags.append(F.max(F.coalesce(veto, F.lit(False))).alias("_veto"))
+        cond = cond & ~F.col("_veto")
+    return rows.groupBy("part_id").agg(*flags).filter(cond).select("part_id")
+
+
 def check_integrity(
     snapshot_dir: str, as_of: int | None = None, filesystem=None, since: int | None = None
 ) -> None:
@@ -747,7 +770,16 @@ def decode(
     reference's index-assisted read, SURVEY §3.3): partitions whose stored
     split-block bloom (see ``EncodeConfig.bloom_columns``) rules the value
     out are dropped before any payload is read; never a false negative.
-    The residual equality filter is applied to the decoded rows.
+    The bloom probe is a Catalyst expression (``bloom.might_contain_col``),
+    so the lookup runs no Python UDF. ``key_in=(column, values)`` probes
+    every value's hash with one numpy UDF and keeps a partition if any may
+    be present. Residual filters make both exact on the decoded rows.
+
+    Partition pruning runs eagerly, inside this call: every partition-level
+    predicate (zone maps, blooms, null counts) is evaluated in ONE Spark
+    job over the chunk metadata, which returns the surviving part ids; the
+    returned frame then scans only those partitions' chunk files. Without
+    a predicate no pruning job runs.
 
     The returned frame carries ``df.p2s_decode_metrics`` — a dict of
     ``pages_read``/``pages_skipped`` SparkContext accumulators populated
@@ -898,9 +930,9 @@ def decode(
             ]).withColumn("part_id", _filename_part_id())
     # key_range (single) and key_ranges (multi, AND-combined) normalize to
     # one predicate list; each predicate prunes partitions independently
-    # (intersection via chained broadcast semijoins), pages inside
-    # surviving chunks are pruned per column, residual filters make every
-    # predicate exact
+    # (all of them in the one pruning job below), pages inside surviving
+    # chunks are pruned per column, residual filters make every predicate
+    # exact
     preds = list(key_ranges or [])
     if key_range:
         preds.append(key_range)
@@ -925,40 +957,41 @@ def decode(
         except TypeError:
             pass  # unorderable/mixed values — bloom + residual only
     key_cols = [p[0] for p in preds]
-    key_col = key_cols[0] if key_cols else None
-    for pcol, lo, hi in preds:
-        keyed = prune_by_range(df.filter(F.col("column") == pcol), pcol, lo, hi)
-        surviving = keyed.select("part_id").distinct()
-        df = df.join(F.broadcast(surviving), "part_id")
-    if key_eq is not None:
+
+    # validity predicates (IS NOT NULL / IS NULL): chunk-level skip from
+    # the per-chunk null_count, page-level skip from the page_nulls index
+    # (reference PageIndex null_count, src/indexes/index.rs:74-135),
+    # residual filters keep the result exact
+    nn_cols = [not_null] if isinstance(not_null, str) else sorted(not_null or [])
+    isnull_cols = [is_null] if isinstance(is_null, str) else sorted(is_null or [])
+    for c in nn_cols + isnull_cols:
+        if c not in schema_map:
+            raise KeyError(f"column {c} not in snapshot schema")
+
+    # Partition pruning: every positive predicate becomes a row filter over
+    # the chunk metadata that drops only its own column's failing rows; a
+    # partition survives with a row left for each positive column.
+    from ..plans import bloom as bloom_mod
+
+    rows = df
+    for p in preds:
+        rows = prune_by_range(rows, *p)
+    has_bloom = "bloom" in df.columns
+    # snapshots written without bloom filters fall through to the
+    # residual equality filter (a null bloom keeps its partition)
+    if key_eq is not None and has_bloom:
         eq_col, eq_val = key_eq
         # the value's hash, computed by the SAME JVM function that hashed
         # the column at encode time; _typed_lit keeps datetime probes
         # session-timezone-independent (UTC instants, like the stored data)
         hv = int(
-            spark.range(1)
+            spark.range(0, 1, 1, 1)
             .select(F.xxhash64(_typed_lit(eq_val, schema_map[eq_col])))
             .first()[0]
         )
-
-        from ..plans import bloom as bloom_mod
-
-        @F.pandas_udf("boolean")
-        def might(b: pd.Series) -> pd.Series:
-            probe = np.array([hv], dtype=np.int64).view(np.uint64)
-            return pd.Series(
-                [
-                    True if bs is None else bool(bloom_mod.might_contain(bs, probe)[0])
-                    for bs in b
-                ]
-            )
-
-        if "bloom" in df.columns:
-            keyed = df.filter(F.col("column") == eq_col).filter(might(F.col("bloom")))
-            df = df.join(F.broadcast(keyed.select("part_id").distinct()), "part_id")
-        # snapshots written without bloom filters fall through to the
-        # residual equality filter (full scan, still correct)
-
+        # a Catalyst expression: the probe never leaves the JVM
+        eq_keep = bloom_mod.might_contain_col(F.col("bloom"), hv)
+        rows = rows.filter((F.col("column") != eq_col) | eq_keep)
     if key_in is not None:
         # IN-list point lookup: one bloom pass with ALL the probe hashes —
         # a partition survives if ANY key might be present; the residual
@@ -970,55 +1003,56 @@ def decode(
         # per-value literal columns would hit the codegen method limit);
         # the frame is reused by the residual semi-join below
         in_probe_frame = _probe_frame(spark, list(in_vals), schema_map[in_col])
-        hv_rows = in_probe_frame.select(
-            F.xxhash64(F.col("__p2s_probe")).alias("h")
-        ).collect()
-        hashes = [r["h"] for r in hv_rows]
-        probes = np.array(hashes, dtype=np.int64).view(np.uint64)
+        if has_bloom:
+            hv_rows = in_probe_frame.select(
+                F.xxhash64(F.col("__p2s_probe")).alias("h")
+            ).collect()
+            probes = np.array([r["h"] for r in hv_rows], dtype=np.int64).view(np.uint64)
 
-        from ..plans import bloom as bloom_mod
+            # N probes stay a numpy UDF: an N-probe Catalyst expression
+            # would hit the same codegen limit as the probe literals
+            @F.pandas_udf("boolean")
+            def might_any(b: pd.Series) -> pd.Series:
+                return pd.Series(
+                    [
+                        True if bs is None else bool(bloom_mod.might_contain(bs, probes).any())
+                        for bs in b
+                    ]
+                )
 
-        @F.pandas_udf("boolean")
-        def might_any(b: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    True if bs is None else bool(bloom_mod.might_contain(bs, probes).any())
-                    for bs in b
-                ]
-            )
-
-        if "bloom" in df.columns:
-            keyed = df.filter(F.col("column") == in_col).filter(might_any(F.col("bloom")))
-            df = df.join(F.broadcast(keyed.select("part_id").distinct()), "part_id")
-
-    # validity predicates (IS NOT NULL / IS NULL): chunk-level skip from
-    # the per-chunk null_count, page-level skip from the page_nulls index
-    # (reference PageIndex null_count, src/indexes/index.rs:74-135),
-    # residual filters keep the result exact
-    nn_cols = [not_null] if isinstance(not_null, str) else sorted(not_null or [])
-    isnull_cols = [is_null] if isinstance(is_null, str) else sorted(is_null or [])
-    for c in nn_cols + isnull_cols:
-        if c not in schema_map:
-            raise KeyError(f"column {c} not in snapshot schema")
+            rows = rows.filter((F.col("column") != in_col) | might_any(F.col("bloom")))
     for c in nn_cols:
         # positive evidence required: a partition survives only when the
         # column's chunk exists with at least one non-null row — this also
         # prunes older partitions that predate the column (all-null there)
-        keep = (
-            df.filter((F.col("column") == c) & (F.col("null_count") < F.col("n_rows")))
-            .select("part_id")
-            .distinct()
-        )
-        df = df.join(F.broadcast(keep), "part_id")
+        rows = rows.filter((F.col("column") != c) | (F.col("null_count") < F.col("n_rows")))
+    # negative evidence prunes IS NULL: drop partitions PROVEN null-free;
+    # partitions that predate the column keep flowing (all-null there)
+    veto = None
     for c in isnull_cols:
-        # negative evidence prunes: drop partitions PROVEN null-free;
-        # partitions that predate the column keep flowing (all-null there)
-        no_null = (
-            df.filter((F.col("column") == c) & (F.col("null_count") == 0))
-            .select("part_id")
-            .distinct()
-        )
-        df = df.join(F.broadcast(no_null), "part_id", "left_anti")
+        proof = (F.col("column") == c) & (F.col("null_count") == 0)
+        veto = proof if veto is None else veto | proof
+
+    pos_cols = sorted(
+        set(key_cols)
+        | ({key_eq[0]} if key_eq is not None and has_bloom else set())
+        | ({key_in[0]} if key_in is not None and has_bloom else set())
+        | set(nn_cols)
+    )
+    if pos_cols or veto is not None:
+        # the veto alone must still see every partition: the anchor column
+        # (oldest snapshot's first column) has a chunk in each of them
+        meta_cols = pos_cols + isnull_cols + ([] if pos_cols else [lin["columns"][0]])
+        rows = rows.filter(F.col("column").isin(meta_cols))
+        survivors = sorted({int(r[0]) for r in _survivor_frame(rows, pos_cols, veto).collect()})
+        # part_id is a function of _metadata.file_name alone, so Catalyst
+        # pushes this filter through the union into every snapshot's scan,
+        # where Spark applies it while listing files: non-surviving chunk
+        # files are never opened, and a snapshot without survivors runs no
+        # scan task. SQL text, not Column.isin: isin crosses py4j once per
+        # value (~50 s for 10^5 survivors), the parsed IN list once.
+        ids = ", ".join(map(str, survivors))
+        df = df.filter(F.expr(f"part_id IN ({ids})") if survivors else F.lit(False))
 
     need = sorted(
         set(cols)
@@ -1219,8 +1253,8 @@ def decode(
     # partition's rows and one parquet row group (writers emit ≤ ~30
     # rows/file), so a file can never split across scan tasks and a
     # partition's chunk rows arrive CONTIGUOUS in the scan stream — the
-    # pruning joins are all broadcast (stream-side order preserved) and
-    # part_id is constant per file. Splitting the stream at part_id
+    # scan carries no join (partition pruning picked the files it reads)
+    # and part_id is constant per file. Splitting the stream at part_id
     # boundaries therefore feeds rebuild() exactly the groups a
     # groupBy(part_id) exchange would build, without shuffling the
     # payload bytes at all (measured: the groupBy plan shuffled every

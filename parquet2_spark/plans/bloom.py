@@ -65,3 +65,29 @@ def might_contain(bitset: bytes, hashes: np.ndarray) -> np.ndarray:
     masks = _masks(h)
     got = words[bi]  # (n, 8)
     return ((got & masks) == masks).all(axis=1)
+
+
+def might_contain_col(col, hv: int):
+    """Catalyst twin of ``might_contain`` for ONE probe hash against a
+    binary bloom column → boolean Column (a null bloom means keep).
+
+    The probe-side arithmetic runs on the driver: the block-hash high word
+    and the eight SALT bit positions all derive from ``hv``, so each row
+    does only ``length``/``substring``/``hex``/``conv`` and bit tests. Under
+    Spark's ANSI arithmetic no row-side value may overflow a signed long;
+    the only row-side product is ``hi32 × n_blocks`` < 2^32 × 2^26 (a
+    binary value is < 2 GiB). Word ``w`` of the block is little-endian, so
+    its bit ``s`` lives in byte ``4w + s // 8`` at bit ``s % 8``."""
+    from pyspark.sql import functions as F
+
+    h = int(hv) & 0xFFFFFFFFFFFFFFFF
+    hi, lo = h >> 32, h & 0xFFFFFFFF
+    shifts = [((lo * int(s)) & 0xFFFFFFFF) >> 27 for s in SALT]
+    n_blocks = F.shiftright(F.length(col), 5)
+    # 1-based position of the probe's 32-byte block
+    base = (F.shiftright(F.lit(hi).cast("long") * n_blocks, 32) * 32 + 1).cast("int")
+    hit = F.lit(True)
+    for w, s in enumerate(shifts):
+        byte = F.conv(F.hex(F.substring(col, base + (4 * w + s // 8), F.lit(1))), 16, 10)
+        hit = hit & (F.shiftright(byte.cast("int"), s % 8).bitwiseAND(1) == 1)
+    return col.isNull() | hit

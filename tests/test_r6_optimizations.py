@@ -351,33 +351,24 @@ class TestMinhashSingleUdfEval:
         return spark.createDataFrame(rows, "doc_id long, text string")
 
     def test_single_udf_eval_in_plan(self, spark):
+        import re
+
         from parquet2_spark.operators.dedup import minhash_signatures
 
-        import contextlib
-        import io
-
-        def _explained(df):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain(extended=True)
-            return buf.getvalue()
+        def _python_evals(df):
+            # Python UDF evaluation nodes of the physical plan, one per line
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return len(re.findall(r"\b(?:ArrowEvalPython|BatchEvalPython)\b", plan))
 
         docs = self._docs(spark)
         nonempty = docs.filter(
             F.col("text").isNotNull() & (F.length("text") > 0)
         )
-        new_plan = _explained(minhash_signatures(nonempty))
-        old_plan = _explained(
-            minhash_signatures(docs).filter(F.col("signature").isNotNull())
-        )
-        # count in the optimized plan section only (last block)
-        def _optimized_evals(p):
-            opt = p.split("== Optimized Logical Plan ==")[1]
-            opt = opt.split("== Physical Plan ==")[0]
-            return opt.count("sig(")
-
-        assert _optimized_evals(new_plan) == 1
-        assert _optimized_evals(old_plan) >= 2  # the shape this replaced
+        assert _python_evals(minhash_signatures(nonempty)) == 1
+        # the shape this replaced: a filter on the UDF's output evaluates
+        # the signature once for the predicate and once for the projection
+        old = minhash_signatures(docs).filter(F.col("signature").isNotNull())
+        assert _python_evals(old) >= 2
 
     def test_row_identical_to_filter_on_output(self, spark):
         from parquet2_spark.operators import dedup
